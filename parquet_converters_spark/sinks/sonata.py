@@ -31,8 +31,9 @@ Semantics mirrored from the reference:
   counts, expands Spark field metadata ``enumeration_values`` into
   ``@library`` tables, and stamps ``parquet2hdf5_version``
   (``sonata_writer.cpp:89-121`` — W3);
-- the adjacency index is built with
-  :func:`parquet_converters_spark.operators.indexing.build_sonata_indices`.
+- the adjacency index is built with the scan path of
+  :func:`parquet_converters_spark.operators.indexing.build_sonata_indices`
+  (:func:`~parquet_converters_spark.operators.indexing.scan_adjacency_index`).
 
 ``export_hdf5`` converts a bundle to a real SONATA HDF5 file (h5py when
 available, else the built-in classic-format writer).
@@ -57,9 +58,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from parquet_converters_spark import __version__
 from parquet_converters_spark.operators.indexing import (
-    build_sonata_indices,
+    INDEX_KEYS,
     infer_node_count,
+    scan_adjacency_index,
 )
+from parquet_converters_spark.session import free_local_checkpoints
 
 COLUMNS_TO_SKIP = {"synapse_id", "__index_level_0__"}
 TOP_LEVEL_DATASETS = ("source_node_id", "target_node_id", "edge_type_id")
@@ -231,44 +234,28 @@ class SonataBundleWriter:
             )
 
         if with_index:
-            node_counts = {
-                "source_to_target": source_size
-                or infer_node_count(table, "source_node_id"),
-                "target_to_source": target_size
-                or infer_node_count(table, "target_node_id"),
-            }
-            indices = build_sonata_indices(
-                table,
-                source_node_count=node_counts["source_to_target"],
-                target_node_count=node_counts["target_to_source"],
-                row_col=row_col,
-            )
-            for direction, (node_ranges, range_edges) in indices.items():
+            sizes = {"source_node_id": source_size,
+                     "target_node_id": target_size}
+            for direction, key in INDEX_KEYS.items():
+                n_nodes = sizes[key] or infer_node_count(table, key)
+                node_ranges, range_edges, n_ranges = scan_adjacency_index(
+                    table, key, n_nodes, row_col
+                )
                 d = os.path.join(self.pop_dir, "indices", direction)
-                # node_ranges has exactly node_count rows (known for
-                # free).  range_edges' row count is data-dependent and
-                # "at most n_records" is a uselessly loose bound (1e9
-                # edges can collapse to 1e6 ranges — sizing from edges
-                # would write hundreds of near-empty files); one count
-                # job is cheap here because it runs over the already-
-                # persisted intermediates of the index build, which the
-                # write then reuses.
-                node_ranges.repartitionByRange(
-                    _range_partitions(
-                        node_counts[direction], par, rows_per_file
-                    ),
-                    "node_id",
-                ).sortWithinPartitions("node_id").write.mode("overwrite").parquet(
-                    os.path.join(d, "node_id_to_ranges.parquet")
-                )
-                range_edges.repartitionByRange(
-                    _range_partitions(
-                        range_edges.count(), par, rows_per_file
-                    ),
-                    "range_id",
-                ).sortWithinPartitions("range_id").write.mode("overwrite").parquet(
-                    os.path.join(d, "range_to_edge_id.parquet")
-                )
+                # both row counts are known, so the files are sized
+                # without a count job; each file is sorted by its key
+                try:
+                    for frame, n, sort_col, name in (
+                        (node_ranges, n_nodes, "node_id", "node_id_to_ranges"),
+                        (range_edges, n_ranges, "range_id", "range_to_edge_id"),
+                    ):
+                        frame.coalesce(
+                            _range_partitions(n, par, rows_per_file)
+                        ).sortWithinPartitions(sort_col).write.mode(
+                            "overwrite"
+                        ).parquet(os.path.join(d, f"{name}.parquet"))
+                finally:
+                    free_local_checkpoints(node_ranges)
 
         manifest = {
             "population": self.population,
@@ -486,6 +473,22 @@ def export_hdf5(
 
 
 
+def _read_bundle_parquet(spark, path: str, schema) -> DataFrame:
+    """Read a bundle dataset with the Spark schema its writer stored in
+    the footer (``schema`` is the first file's Arrow schema), so the read
+    runs no schema-inference job; a file without it falls back to
+    inference."""
+    from pyspark.sql.types import StructType
+
+    row_md = (schema.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    reader = spark.read
+    if row_md:
+        reader = reader.schema(StructType.fromJson(json.loads(row_md)))
+    return reader.parquet(path)
+
+
 def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
     """(name, numpy dtype) for every edge column, in SONATA dataset
     order.  Strings have a data-dependent fixed width in HDF5: ONE Spark
@@ -508,7 +511,7 @@ def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
             str_cols.append(name)
     if str_cols:
         widths = (
-            spark.read.parquet(table_path)
+            _read_bundle_parquet(spark, table_path, schema)
             .agg(
                 *[
                     F.max(F.octet_length(F.col(c))).alias(c)
@@ -584,6 +587,7 @@ def export_hdf5_parallel(
 
     table_path = os.path.join(pop_dir, "table.parquet")
     n_rows, schema = table_meta(table_path)
+    schemas = {table_path: schema}
 
     big = _edge_column_dtypes(spark, table_path, schema, manifest)
 
@@ -606,8 +610,8 @@ def export_hdf5_parallel(
             continue
         for fname, (key, cols) in _INDEX_COLS.items():
             p = os.path.join(d, f"{fname}.parquet")
-            n_i, sch_i = table_meta(p)
-            dt_i = np.dtype(sch_i.field(cols[0]).type.to_pandas_dtype())
+            n_i, schemas[p] = table_meta(p)
+            dt_i = np.dtype(schemas[p].field(cols[0]).type.to_pandas_dtype())
             jobs.append(
                 (p, key, list(cols),
                  f"{base}/indices/{direction}/{fname}", n_i, dt_i)
@@ -685,26 +689,21 @@ def export_hdf5_parallel(
             yield pd.DataFrame({"rows_written": [written]})
 
         need = sorted({key_col} | {c for cols, _, _ in col_specs for c in cols})
-        # Range-partition + sort on the key BEFORE filling: the bundle's
-        # keys are dense 0..n-1, so each sorted Arrow batch becomes ONE
-        # contiguous run -> one seek+write per column per batch.  Without
-        # this, scattered input degrades to a syscall per row (measured
-        # 200 s vs 8 s for 5M rows).  One range exchange is the honest
-        # cost — the same sort the reference performs to compute its
-        # hyperslab offsets (src/parquet2hdf5.cpp:97-110).
-        par = max(1, spark.sparkContext.defaultParallelism)
-        df = (
-            spark.read.parquet(parquet_path)
-            .select(*need)
-            .repartitionByRange(par, key_col)
-            .sortWithinPartitions(key_col)
+        # No exchange before the fill: the bundle writer already wrote
+        # every dataset as files sorted by their dense key, so each Arrow
+        # batch holds a few contiguous key runs -> a few seek+writes per
+        # column per batch.  Correctness never depends on that order:
+        # fill argsorts every batch and writes each run of consecutive
+        # keys at its own offset, so a bundle with scattered keys (not
+        # written by SonataBundleWriter) still exports byte-identically,
+        # only with more, shorter writes.
+        df = _read_bundle_parquet(
+            spark, parquet_path, schemas[parquet_path]
+        ).select(*need)
+        return sum(
+            r["rows_written"]
+            for r in df.mapInPandas(fill, "rows_written long").collect()
         )
-        total = (
-            df.mapInPandas(fill, "rows_written long")
-            .agg(F.sum("rows_written").alias("n"))
-            .collect()[0]["n"]
-        ) or 0
-        return int(total)
 
     # group jobs by source table so each parquet is scanned once
     by_source: dict[tuple[str, str], list] = {}

@@ -189,3 +189,113 @@ def test_global_row_index_ordered_mode_is_hierarchical(spark):
     out = with_global_row_index(df, "idx", order_cols=["k"]).collect()
     got = sorted((r["k"], r["idx"]) for r in out)
     assert got == [(k, i) for i, k in enumerate(sorted(k for k, _ in rows))]
+
+
+def _numpy_index(keys, n_nodes):
+    """Reference index of ``keys`` (one key per edge, in row order):
+    run-length -> lexsort (node, start) -> searchsorted per node."""
+    import numpy as np
+
+    keys = np.asarray(keys, dtype=np.int64)
+    brk = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+    starts = np.concatenate(([0], brk))
+    ends = np.concatenate((brk, [len(keys)]))
+    nodes = keys[starts]
+    order = np.lexsort((starts, nodes))
+    nodes = nodes[order]
+    range_to_edge = [(i, int(s), int(e))
+                     for i, (s, e) in enumerate(zip(starts[order], ends[order]))]
+    ids = np.arange(n_nodes)
+    lo = np.searchsorted(nodes, ids, "left")
+    hi = np.searchsorted(nodes, ids, "right")
+    node_to_ranges = [(int(i), int(a), int(b)) if b > a else (int(i), 0, 0)
+                      for i, a, b in zip(ids, lo, hi)]
+    return node_to_ranges, range_to_edge
+
+
+def _assert_scan_matches_numpy(spark, src, dst, n_src, n_dst, parts, seed=0):
+    """Scan build of both directions over rows shuffled across ``parts``
+    input partitions == the numpy reference index."""
+    import random
+
+    from parquet_converters_spark.operators import build_adjacency_index
+
+    rows = [(int(s), int(t), i) for i, (s, t) in enumerate(zip(src, dst))]
+    random.Random(seed).shuffle(rows)
+    df = spark.createDataFrame(
+        rows, "source_node_id long, target_node_id long, row_index long"
+    ).repartition(parts)
+    for key, keys, n in (("source_node_id", src, n_src),
+                         ("target_node_id", dst, n_dst)):
+        nr, re_ = build_adjacency_index(df, key, n, method="scan")
+        want_nr, want_re = _numpy_index(keys, n)
+        assert sorted(map(tuple, nr.collect())) == want_nr, key
+        assert sorted(map(tuple, re_.collect())) == want_re, key
+
+
+@pytest.mark.parametrize(
+    "src, dst, n_src, n_dst, parts",
+    [
+        # node_count (17, 11) not a multiple of B (5)
+        ([(i * 7) % 17 for i in range(40) for _ in range(3)],
+         [i // 11 for i in range(120)], 17, 11, 5),
+        # empty node blocks (B = 8, five nodes each: 10-19 and 25-34
+        # have no edges) and edge-less nodes at block edges (4 | 5, 39)
+        ([0, 0, 4, 5, 5, 21, 39, 4, 0, 21] * 6,
+         [39, 38, 37, 0, 0, 0, 1, 2, 3, 3] * 6, 40, 40, 8),
+        # runs crossing input-partition boundaries: long runs, 16 parts
+        ([i // 25 for i in range(200)], [(i // 3) % 4 for i in range(200)],
+         8, 4, 16),
+        ([2], [0], 3, 1, 1),  # one row only
+        ([0] * 30, [0] * 30, 1, 1, 6),  # a single node
+    ],
+    ids=["uneven-blocks", "empty-blocks", "cross-partition-runs",
+         "one-row", "single-node"],
+)
+def test_scan_index_matches_numpy(spark, src, dst, n_src, n_dst, parts):
+    _assert_scan_matches_numpy(spark, src, dst, n_src, n_dst, parts)
+
+
+def test_scan_index_property_random(spark):
+    """Randomized: run-structured keys, node counts and partition counts
+    drawn independently; the scan build equals the numpy index."""
+    from hypothesis import given, settings, strategies as st
+
+    @settings(max_examples=6, deadline=None)
+    @given(
+        runs=st.lists(
+            st.tuples(st.integers(0, 30), st.integers(1, 12)),
+            min_size=1, max_size=25,
+        ),
+        extra_nodes=st.integers(0, 9),
+        parts=st.integers(1, 12),
+        seed=st.integers(0, 1000),
+    )
+    def check(runs, extra_nodes, parts, seed):
+        src = [k for k, length in runs for _ in range(length)]
+        dst = list(reversed(src))
+        n = max(src) + 1 + extra_nodes
+        _assert_scan_matches_numpy(spark, src, dst, n, n, parts, seed)
+
+    check()
+
+
+@pytest.mark.parametrize(
+    "keys, bad",
+    [([0, 3, 12, 1], "12"), ([0, -1, 2], "-1"), ([0, None, 2], "NULL")],
+    ids=["above", "negative", "null"],
+)
+def test_scan_index_rejects_keys_outside_node_range(spark, keys, bad):
+    """A key outside [0, node_count) would write range_to_edge_id rows no
+    node points to: the build raises, naming the key and the bound, and
+    releases what it materialised."""
+    from parquet_converters_spark.operators import build_adjacency_index
+
+    df = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)],
+        "source_node_id long, row_index long",
+    )
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    with pytest.raises(ValueError, match=rf"'source_node_id' .*{bad}.*\[0, 10\)"):
+        build_adjacency_index(df, "source_node_id", 10, method="scan")
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == persisted
