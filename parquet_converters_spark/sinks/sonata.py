@@ -527,6 +527,54 @@ def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
     return big
 
 
+def _export_plan(spark, bundle_dir: str, population: str):
+    """The distributed datasets both parallel ``.h5`` exports write.
+
+    Returns ``(pop_dir, base, manifest, tables)``.  ``tables`` lists
+    every source parquet once, edge table first, as ``(path, key column,
+    row count, Arrow schema, specs)``; ``specs`` are the ``(dataset
+    path, cols, numpy dtype)`` one scan of that table fills, in skeleton
+    order.  Edge columns are 1-wide; each adjacency index table is one
+    (n, 2) dataset with the dense key AS the row number."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from parquet_converters_spark.sources.ordering import (
+        _sorted_files,
+        file_row_counts,
+    )
+
+    pop_dir = os.path.join(bundle_dir, "edges", population)
+    with open(os.path.join(pop_dir, "attributes.json")) as f:
+        manifest = json.load(f)
+    base = f"/edges/{population}"
+
+    def table_meta(path):
+        files = _sorted_files(path)
+        return sum(file_row_counts(files)), pq.ParquetFile(files[0]).schema_arrow
+
+    table_path = os.path.join(pop_dir, "table.parquet")
+    n_rows, schema = table_meta(table_path)
+    edge_specs = [
+        (_dataset_path(base, name, manifest), (name,), dt)
+        for name, dt in _edge_column_dtypes(spark, table_path, schema, manifest)
+    ]
+    tables = [
+        (table_path, manifest["row_index_column"], n_rows, schema, edge_specs)
+    ]
+    for direction in ("source_to_target", "target_to_source"):
+        d = os.path.join(pop_dir, "indices", direction)
+        if not os.path.isdir(d):
+            continue
+        for fname, (key, cols) in _INDEX_COLS.items():
+            p = os.path.join(d, f"{fname}.parquet")
+            n_i, sch_i = table_meta(p)
+            dt_i = np.dtype(sch_i.field(cols[0]).type.to_pandas_dtype())
+            ds = f"{base}/indices/{direction}/{fname}"
+            tables.append((p, key, n_i, sch_i, [(ds, tuple(cols), dt_i)]))
+    return pop_dir, base, manifest, tables
+
+
 def export_hdf5_parallel(
     spark,
     bundle_dir: str,
@@ -567,63 +615,22 @@ def export_hdf5_parallel(
     (``tests/test_hdf5_export.py``).
     """
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Writer
-    from parquet_converters_spark.sources.ordering import (
-        _sorted_files,
-        file_row_counts,
-    )
 
-    pop_dir = os.path.join(bundle_dir, "edges", population)
-    with open(os.path.join(pop_dir, "attributes.json")) as f:
-        manifest = json.load(f)
-    base = f"/edges/{population}"
-    row_col = manifest["row_index_column"]
-
-    def table_meta(path):
-        files = _sorted_files(path)
-        return sum(file_row_counts(files)), pq.ParquetFile(files[0]).schema_arrow
-
-    table_path = os.path.join(pop_dir, "table.parquet")
-    n_rows, schema = table_meta(table_path)
-    schemas = {table_path: schema}
-
-    big = _edge_column_dtypes(spark, table_path, schema, manifest)
-
+    pop_dir, base, manifest, tables = _export_plan(spark, bundle_dir, population)
     datasets, attrs = _gather_small_datasets(
         pop_dir, base, manifest, include_indices=False
     )
-
-    # distributed-fill jobs: (parquet path, key col, value cols,
-    # dataset path, rows, numpy dtype).  Edge columns are 1-wide; the
-    # adjacency indices are (n, 2) with the dense key AS the row number.
-    jobs = []
-    for name, np_dtype in big:
-        jobs.append(
-            (table_path, row_col, [name],
-             _dataset_path(base, name, manifest), n_rows, np_dtype)
-        )
-    for direction in ("source_to_target", "target_to_source"):
-        d = os.path.join(pop_dir, "indices", direction)
-        if not os.path.isdir(d):
-            continue
-        for fname, (key, cols) in _INDEX_COLS.items():
-            p = os.path.join(d, f"{fname}.parquet")
-            n_i, schemas[p] = table_meta(p)
-            dt_i = np.dtype(schemas[p].field(cols[0]).type.to_pandas_dtype())
-            jobs.append(
-                (p, key, list(cols),
-                 f"{base}/indices/{direction}/{fname}", n_i, dt_i)
-            )
 
     w = MiniH5Writer()
     w.create_group(base)
     for path, arr in datasets.items():
         w.create_dataset(path, arr)
-    for _, _, cols, ds_path, n_i, dt_i in jobs:
-        shape = (n_i,) if len(cols) == 1 else (n_i, len(cols))
-        w.create_placeholder(ds_path, shape, dt_i)
+    for _, _, n_i, _, specs in tables:
+        for ds_path, cols, dt_i in specs:
+            shape = (n_i,) if len(cols) == 1 else (n_i, len(cols))
+            w.create_placeholder(ds_path, shape, dt_i)
     for path, a in attrs.items():
         for k, v in a.items():
             w.set_attr(path, k, v)
@@ -631,7 +638,7 @@ def export_hdf5_parallel(
 
     target = os.path.abspath(h5_path)
 
-    def run_fill(parquet_path, key_col, col_specs, n_expected):
+    def run_fill(parquet_path, key_col, n_expected, schema, col_specs):
         """col_specs: list of (cols tuple, offset, dtype str) — one scan
         of parquet_path fills every listed dataset."""
 
@@ -697,39 +704,24 @@ def export_hdf5_parallel(
         # keys at its own offset, so a bundle with scattered keys (not
         # written by SonataBundleWriter) still exports byte-identically,
         # only with more, shorter writes.
-        df = _read_bundle_parquet(
-            spark, parquet_path, schemas[parquet_path]
-        ).select(*need)
+        df = _read_bundle_parquet(spark, parquet_path, schema).select(*need)
         return sum(
             r["rows_written"]
             for r in df.mapInPandas(fill, "rows_written long").collect()
         )
 
-    # group jobs by source table so each parquet is scanned once
-    by_source: dict[tuple[str, str], list] = {}
-    expected: dict[tuple[str, str], int] = {}
-    for parquet_path, key_col, cols, ds_path, n_i, _ in jobs:
-        meta = w.data_offsets[ds_path]
-        by_source.setdefault((parquet_path, key_col), []).append(
-            (tuple(cols), meta["offset"], meta["dtype"])
-        )
-        expected[(parquet_path, key_col)] = n_i
-
-    total_edges = 0
-    for (parquet_path, key_col), col_specs in by_source.items():
-        got = run_fill(
-            parquet_path, key_col, col_specs,
-            expected[(parquet_path, key_col)],
-        )
-        want = expected[(parquet_path, key_col)]
-        if got != want:
+    for parquet_path, key_col, n_i, schema, specs in tables:
+        col_specs = [
+            (cols, w.data_offsets[ds]["offset"], w.data_offsets[ds]["dtype"])
+            for ds, cols, _ in specs
+        ]
+        got = run_fill(parquet_path, key_col, n_i, schema, col_specs)
+        if got != n_i:
             raise RuntimeError(
                 f"parallel HDF5 export wrote {got} rows of "
-                f"{parquet_path}, expected {want}"
+                f"{parquet_path}, expected {n_i}"
             )
-        if parquet_path == table_path:
-            total_edges = got
-    return total_edges
+    return tables[0][2]
 
 
 def export_hdf5_parallel_compressed(
@@ -790,53 +782,17 @@ def export_hdf5_parallel_compressed(
     import pyarrow.parquet as pq
 
     from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Writer
-    from parquet_converters_spark.sources.ordering import (
-        _sorted_files,
-        file_row_counts,
-    )
 
-    pop_dir = os.path.join(bundle_dir, "edges", population)
-    with open(os.path.join(pop_dir, "attributes.json")) as f:
-        manifest = json.load(f)
-    base = f"/edges/{population}"
-    row_col = manifest["row_index_column"]
-
-    def table_meta(path):
-        files = _sorted_files(path)
-        return sum(file_row_counts(files)), pq.ParquetFile(files[0]).schema_arrow
-
-    table_path = os.path.join(pop_dir, "table.parquet")
-    n_rows, schema = table_meta(table_path)
+    pop_dir, base, manifest, tables = _export_plan(spark, bundle_dir, population)
+    n_rows = tables[0][2]
     if chunk_rows is None:
         chunk_rows = _auto_chunk_rows(n_rows)
-    big = _edge_column_dtypes(spark, table_path, schema, manifest)
-
-    # jobs: (parquet path, key col, [(ds_path, cols, dtype)], n_rows)
-    jobs = []
-    edge_specs = [
-        (_dataset_path(base, name, manifest), (name,), dt)
-        for name, dt in big
-    ]
-    jobs.append((table_path, row_col, edge_specs, n_rows))
-    for direction in ("source_to_target", "target_to_source"):
-        d = os.path.join(pop_dir, "indices", direction)
-        if not os.path.isdir(d):
-            continue
-        for fname, (key, cols) in _INDEX_COLS.items():
-            p = os.path.join(d, f"{fname}.parquet")
-            n_i, sch_i = table_meta(p)
-            dt_i = np.dtype(sch_i.field(cols[0]).type.to_pandas_dtype())
-            jobs.append(
-                (p, key,
-                 [(f"{base}/indices/{direction}/{fname}", tuple(cols), dt_i)],
-                 n_i)
-            )
 
     # split: datasets above one chunk go two-pass; the rest (metadata-
     # scale by definition) are read driver-side, matching the single
     # writer's contiguous rule exactly
-    chunked_jobs = [j for j in jobs if j[3] > chunk_rows]
-    small_jobs = [j for j in jobs if j[3] <= chunk_rows]
+    chunked_jobs = [t for t in tables if t[2] > chunk_rows]
+    small_jobs = [t for t in tables if t[2] <= chunk_rows]
 
     import uuid
 
@@ -848,7 +804,7 @@ def export_hdf5_parallel_compressed(
     )
     c = int(chunk_rows)
 
-    def run_compress(parquet_path, key_col, specs, n_i, mode):
+    def run_compress(parquet_path, key_col, n_i, schema, specs, mode):
         """Pass 1 for one source table: one shuffle on key DIV c, one
         output row per (dataset, chunk)."""
         specs_ser = [
@@ -924,7 +880,7 @@ def export_hdf5_parallel_compressed(
             {key_col} | {col for _, cols, _ in specs for col in cols}
         )
         (
-            spark.read.parquet(parquet_path)
+            _read_bundle_parquet(spark, parquet_path, schema)
             .select(*need)
             .withColumn(
                 "_chunk", F.expr(f"CAST(`{key_col}` DIV {c} AS LONG)")
@@ -940,8 +896,8 @@ def export_hdf5_parallel_compressed(
 
     try:
         mode = "overwrite"
-        for parquet_path, key_col, specs, n_i in chunked_jobs:
-            run_compress(parquet_path, key_col, specs, n_i, mode)
+        for table in chunked_jobs:
+            run_compress(*table, mode)
             mode = "append"
 
         # driver: sizes only (never the blobs)
@@ -974,7 +930,7 @@ def export_hdf5_parallel_compressed(
                 )
             else:
                 w.create_dataset(path, arr)
-        for parquet_path, key_col, specs, n_i in small_jobs:
+        for parquet_path, key_col, _, _, specs in small_jobs:
             t = pq.read_table(parquet_path).sort_by(key_col)
             for ds, cols, dt in specs:
                 mats = [
@@ -992,7 +948,7 @@ def export_hdf5_parallel_compressed(
                     else np.ascontiguousarray(np.stack(mats, axis=1))
                 )
                 w.create_dataset(ds, arr)
-        for parquet_path, key_col, specs, n_i in chunked_jobs:
+        for _, _, n_i, _, specs in chunked_jobs:
             for ds, cols, dt in specs:
                 n_chunks = -(-n_i // c)
                 got = sizes_by_ds.get(ds, {})
@@ -1016,7 +972,7 @@ def export_hdf5_parallel_compressed(
         if chunked_jobs:
             addr_map = {
                 ds: w.data_offsets[ds]["chunk_addrs"]
-                for _, _, specs, _ in chunked_jobs
+                for *_, specs in chunked_jobs
                 for ds, _, _ in specs
             }
             b_addr = spark.sparkContext.broadcast(addr_map)
